@@ -40,15 +40,20 @@ def list_dirs(spark: SparkSession, path: str) -> list[str]:
 def list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """Recursive (path, length) listing (reference `listFile`,
     `CommonUtils.java:134-140` — which keyed by basename and silently
-    collapsed collisions; we key by full path)."""
+    collapsed collisions; we key by full path). Walks with listStatus:
+    listFiles builds a LocatedFileStatus per file, which on the local
+    filesystem loads permissions by forking a shell per file (~4 ms)."""
     fs, p = _fs_and_path(spark, path)
     out: list[tuple[str, int]] = []
     if not fs.exists(p):
         return out
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        out.append((st.getPath().toString(), int(st.getLen())))
+    dirs = [p]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                out.append((st.getPath().toString(), int(st.getLen())))
     return sorted(out)
 
 

@@ -35,15 +35,20 @@ from typing import Iterator
 
 from pyspark.sql import SparkSession
 
-HEALTH_SCHEMA = "path string, ok boolean, reason string"
+HEALTH_SCHEMA = "path string, ok boolean, reason string, schema string"
+# footer key-value entry in which Spark stores the schema it wrote
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def scan_parquet_health(
     spark: SparkSession, files: list[str]
-) -> tuple[list[str], list[dict]]:
-    """Validate parquet footers of ``files``; returns
-    ``(healthy_paths, quarantined)`` where each quarantined entry is
-    ``{"path": ..., "reason": ...}``.
+) -> tuple[dict[str, str], list[dict]]:
+    """Validate parquet footers of ``files``; returns ``(healthy,
+    quarantined)``. ``healthy`` maps each healthy path, in path order,
+    to a digest of its footer schema: the parquet schema plus Spark's
+    row metadata, everything Spark derives the file's schema from, so
+    files with equal digests read with equal schemas. Each quarantined
+    entry is ``{"path": ..., "reason": ...}``.
 
     Executor-distributed: one footer open per file via pyarrow (no data
     pages read), partitioned across the cluster — the driver only
@@ -52,17 +57,20 @@ def scan_parquet_health(
     the URI's own filesystem is resolved per file.
     """
     if not files:
-        return [], []
+        return {}, []
 
     import pandas as pd
 
     def _check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import hashlib
+
         import pyarrow.parquet as pq
         from pyarrow import fs as pafs
 
         for pdf in batches:
-            rows: dict[str, list] = {"path": [], "ok": [], "reason": []}
+            rows: dict[str, list] = {"path": [], "ok": [], "reason": [], "schema": []}
             for uri in pdf["path"]:
+                schema = ""
                 try:
                     if uri.startswith("file:"):
                         fs_obj = pafs.LocalFileSystem()
@@ -72,13 +80,18 @@ def scan_parquet_health(
                     else:
                         fs_obj, rel = pafs.FileSystem.from_uri(uri)
                     with fs_obj.open_input_file(rel) as fh:
-                        pq.ParquetFile(fh)  # footer parse only
+                        meta = pq.ParquetFile(fh).metadata  # footer parse only
+                    # the schema printout, minus its object-address line
+                    text = str(meta.schema).partition("\n")[2].encode()
+                    text += (meta.metadata or {}).get(SPARK_ROW_METADATA, b"")
+                    schema = hashlib.sha256(text).hexdigest()
                     ok, reason = True, ""
                 except Exception as exc:  # noqa: BLE001 — verdict, not crash
                     ok, reason = False, f"{type(exc).__name__}: {exc}"
                 rows["path"].append(uri)
                 rows["ok"].append(bool(ok))
                 rows["reason"].append(reason)
+                rows["schema"].append(schema)
             yield pd.DataFrame(rows)
 
     n = max(1, min(len(files), spark.sparkContext.defaultParallelism))
@@ -88,7 +101,7 @@ def scan_parquet_health(
         .mapInPandas(_check, HEALTH_SCHEMA)
         .collect()
     )
-    healthy = sorted(r.path for r in verdicts if r.ok)
+    healthy = {r.path: r.schema for r in sorted(verdicts) if r.ok}
     quarantined = sorted(
         ({"path": r.path, "reason": r.reason} for r in verdicts if not r.ok),
         key=lambda d: d["path"],
@@ -97,12 +110,20 @@ def scan_parquet_health(
 
 
 def data_files(spark: SparkSession, root: str) -> list[str]:
-    """All data files under ``root`` (recursively), excluding markers
-    (_SUCCESS, hidden/temp files) — the candidate set for a health scan."""
+    """All data files under ``root`` (recursively) that a Spark directory
+    read of ``root`` would see — the candidate set for a health scan.
+    Like Spark, it skips every path with a hidden name below ``root``:
+    markers (_SUCCESS), checksums (.crc) and the temp dirs of unfinished
+    writes (_temporary, .spark-staging-*), but not ``_col=value``
+    partition dirs."""
     from . import fs
 
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    base = fs.qualify(spark, root)
     return [
         p
         for p, _ in fs.list_files(spark, root)
-        if not p.rsplit("/", 1)[-1].startswith(("_", "."))
+        if not any(hidden(n) for n in p[len(base) :].split("/"))
     ]

@@ -10,11 +10,17 @@ Behavioral contract preserved (SURVEY §2A semantics):
 plus structured alerts instead of SMTP.
 
 Architectural upgrade over the reference: the copy is ONE distributed
-scan→sink job with partition pruning — no per-partition driver loop, no
-local staging of bytes (`TransTablePartition.java:124,132` pumped every
-byte through the driver's /data/tmp). At 100 TB: executors stream
-partition files cluster-to-cluster; the only driver work is metadata
-(key enumeration + FS listings).
+scan→sink job — no per-partition driver loop, no local staging of bytes
+(`TransTablePartition.java:124,132` pumped every byte through the
+driver's /data/tmp). At 100 TB: executors stream partition files
+cluster-to-cluster; the only driver work is metadata (key enumeration +
+FS listings).
+
+One source read path: the table's data files are listed once and
+footer-checked once (pipelines/health.py); corrupt files are
+quarantined. The union schema comes from the healthy files table-wide,
+the copy reads the healthy files of the copied partitions, and
+verification fingerprints that same source DataFrame.
 """
 
 from __future__ import annotations
@@ -27,10 +33,8 @@ from pyspark.sql import functions as F
 
 from . import fs
 from .alerts import Alert, AlertSink
-from .health import data_files as health_data_files
-from .health import scan_parquet_health
+from .health import data_files, scan_parquet_health
 from .verify import (
-    DEFAULT_PARTITION,
     VerifyReport,
     partition_key_str,
     verify,
@@ -91,11 +95,6 @@ class MigrateJob:
     end: str | None = None  # reference `-e`
     mode: str = "skip"  # conflict policy: skip | overwrite | fail
     verify_after: bool = True
-    # Footer-validate every candidate source file before the copy reads
-    # it; corrupt files are quarantined (excluded + reported + alerted)
-    # instead of killing the whole distributed copy job (r13; see
-    # pipelines/health.py for the contract). Metadata-only cost.
-    quarantine_scan: bool = True
 
     @property
     def src_path(self) -> str:
@@ -199,111 +198,61 @@ def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None)
 
     to_copy = present if job.mode == "overwrite" else [k for k in present if k not in dst_existing]
     report.to_copy = sorted(to_copy)
+    src_df: DataFrame | None = None
     if to_copy:
-        # 4. ONE distributed copy job. The isin filter prunes source
-        #    partitions at planning time (PartitionFilters in the scan);
-        #    dynamic partition overwrite keeps idempotent re-runs safe.
-        #    Inference off: the partition column stays the STRING the
-        #    dir spells, so the destination layout is byte-identical.
-        #    The NULL partition's rows read back with a NULL key, never
-        #    the sentinel dir name — an isin on the sentinel matches
-        #    NOTHING and silently drops the whole partition (r12 probe
-        #    find); it needs an explicit isNull branch.
-        named = [k for k in to_copy if k != DEFAULT_PARTITION]
-        cond = F.col(pn).isin(named) if named else F.lit(False)
-        if DEFAULT_PARTITION in to_copy:
-            cond = cond | F.col(pn).isNull()
-        #    Container health (r13, pipelines/health.py): footer-validate
-        #    the candidate files first — one truncated upload must cost
-        #    one quarantined FILE (reported + alerted), not the whole
-        #    distributed copy job.
-        healthy: list[str] | None = None
-        healthy_all: list[str] = []
-        if job.quarantine_scan:
-            candidates: list[str] = []
-            for k in to_copy:
-                candidates += health_data_files(
-                    spark, f"{job.src_path}/{pn}={k}"
+        # 4. One source read, planned from one listing. Container health
+        #    (r13, pipelines/health.py): every data file of the table is
+        #    footer-checked once, so one truncated upload costs one
+        #    quarantined FILE (reported + alerted) and never the copy
+        #    job — a corrupt file outside the copy set too, since the
+        #    schema merge below spans the whole table. Only files of the
+        #    copied partitions are quarantine entries; the copy never
+        #    touches the rest.
+        base = fs.qualify(spark, job.src_path)
+        in_copy = tuple(f"{base}/{pn}={k}/" for k in to_copy)
+        healthy, quarantined = scan_parquet_health(spark, data_files(spark, job.src_path))
+        report.quarantined = [q for q in quarantined if q["path"].startswith(in_copy)]
+        for q in report.quarantined:
+            sink.emit(
+                Alert(
+                    "error",
+                    "corrupt_file",
+                    job.table,
+                    q["path"],
+                    f"quarantined (excluded from copy): {q['reason']}",
                 )
-            healthy, quarantined = scan_parquet_health(spark, candidates)
-            if quarantined:
-                report.quarantined = quarantined
-                for q in quarantined:
-                    sink.emit(
-                        Alert(
-                            "error",
-                            "corrupt_file",
-                            job.table,
-                            q["path"],
-                            f"quarantined (excluded from copy): {q['reason']}",
-                        )
-                    )
-                # Schema-union source (ADVICE r13): the narrowed
-                # healthy-file read below would merge only the to_copy
-                # partitions' schemas, silently dropping a column that
-                # exists ONLY in a partition outside the copy set —
-                # the exact r12 schema-evolution class, reintroduced by
-                # the quarantine path. Health-scan the WHOLE table
-                # (footer-parse only, the same metadata cost the normal
-                # path's mergeSchema inference pays) and derive the
-                # union schema from every healthy file table-wide; the
-                # copy still reads only the healthy to_copy files.
-                # Corrupt files outside the copy set contribute nothing
-                # to the schema and are not copied, so they are not
-                # quarantine entries — the copy contract never touched
-                # them.
-                copy_set = set(candidates)
-                rest = [
-                    f
-                    for f in health_data_files(spark, job.src_path)
-                    if f not in copy_set
-                ]
-                rest_ok, _ = scan_parquet_health(spark, rest)
-                healthy_all = sorted(healthy + rest_ok)
-            else:
-                healthy = None  # normal path: whole-directory read
-        #    mergeSchema: a schema-evolved partition (one that gained a
-        #    column) otherwise has that column SILENTLY DROPPED by the
-        #    sampled-file schema — and verification, reading the source
-        #    the same way, stays green through the loss (r12 probe
-        #    find). A copy tool must read the superset schema; older
-        #    partitions carry NULLs for the newer columns.
-        with raw_partition_values(spark):
-            if healthy is not None:
-                # explicit healthy-file read; basePath keeps the
-                # partition column resolvable from the dir layout.
-                # The schema is the TABLE-WIDE healthy union (see the
-                # scan above): files lacking a newer column read it as
-                # NULLs instead of dropping it from the copy.
-                base = fs.qualify(spark, job.src_path)
+            )
+        copy_files = [f for f in healthy if f.startswith(in_copy)]
+        #    The file list selects the partitions, the NULL partition's
+        #    __HIVE_DEFAULT_PARTITION__ dir included (its rows read back
+        #    with a NULL key, which no value filter on the sentinel would
+        #    match — r12 probe find). Inference off: the partition column
+        #    stays the STRING the dir spells, so the destination layout
+        #    is byte-identical; basePath keeps it resolvable from the
+        #    dir layout. The schema is the mergeSchema union of every
+        #    healthy file table-wide: a column that exists only in some
+        #    partitions — possibly outside the copy set — reads as NULLs
+        #    instead of being silently dropped (r12 schema-evolution
+        #    find, ADVICE r13). Files with equal footer schemas add
+        #    nothing to the merge, so it reads one file per schema.
+        if copy_files:
+            one_per_schema: dict[str, str] = {}
+            for f, schema in healthy.items():
+                one_per_schema.setdefault(schema, f)
+            with raw_partition_values(spark):
                 union_schema = (
                     spark.read.option("mergeSchema", "true")
                     .option("basePath", base)
-                    .parquet(*healthy_all)
+                    .parquet(*one_per_schema.values())
                     .schema
-                    if healthy_all
-                    else None
                 )
-                reader = spark.read.option("mergeSchema", "true").option(
-                    "basePath", base
-                )
-                if union_schema is not None:
-                    reader = reader.schema(union_schema)
                 src_df = (
-                    reader.parquet(*healthy).where(cond)
-                    if healthy
-                    else None
+                    spark.read.schema(union_schema)
+                    .option("basePath", base)
+                    .parquet(*copy_files)
                 )
-            else:
-                src_df = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(job.src_path)
-                    .where(cond)
-                )
-        if src_df is None:
-            report.copied = []
-            to_copy = []
-        else:
+            # ONE distributed copy job; dynamic partition overwrite keeps
+            # idempotent re-runs safe.
             writer = src_df.write.partitionBy(pn)
             if job.mode == "overwrite":
                 writer = writer.mode("overwrite").option(
@@ -317,27 +266,14 @@ def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None)
     # 5. Post-copy verification (R11) per copied partition — row-content,
     #    both directions (upgrade over file-size compare). Batched: one
     #    grouped-fingerprint scan per side covers every copied partition;
-    #    only mismatching keys pay for the row-level diff. When files
-    #    were quarantined the SOURCE side reads the same healthy file
-    #    list the copy read, so the fingerprints reconcile exactly and
-    #    the report is "equal, minus the NAMED quarantined files" — the
-    #    quarantine entries carry the loss, verification proves the
-    #    copy moved everything it was allowed to read.
-    if job.verify_after and report.copied:
+    #    only mismatching keys pay for the row-level diff. The source
+    #    side is the DataFrame the copy read — same healthy files, same
+    #    union schema — so the fingerprints reconcile exactly and the
+    #    report is "equal, minus the NAMED quarantined files": the
+    #    quarantine entries carry the loss, verification proves the copy
+    #    moved everything it was allowed to read.
+    if job.verify_after and src_df is not None:
         with raw_partition_values(spark):
-            if report.quarantined and healthy:
-                # same narrowed file list AND the same table-wide union
-                # schema the copy wrote — the destination carries NULLs
-                # for columns absent from these files, so the source
-                # fingerprints must be computed over the identical shape.
-                vreader = spark.read.option("mergeSchema", "true").option(
-                    "basePath", fs.qualify(spark, job.src_path)
-                )
-                if union_schema is not None:
-                    vreader = vreader.schema(union_schema)
-                src_df = vreader.parquet(*healthy)
-            else:
-                src_df = spark.read.option("mergeSchema", "true").parquet(job.src_path)
             dst_df = spark.read.option("mergeSchema", "true").parquet(job.dst_path)
         report.verify = verify_partitions(src_df, dst_df, pn, report.copied)
         for k, rep in report.verify.items():

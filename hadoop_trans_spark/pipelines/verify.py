@@ -50,17 +50,22 @@ def row_hash(df: DataFrame) -> F.Column:
     return F.xxhash64(*[_canon_col(df, c) for c in df.columns])
 
 
+def _fingerprint_aggs(h: F.Column, prefix: str = "") -> list[F.Column]:
+    """Row count, order-independent sum of row hashes ``h`` and distinct
+    hash count, each aliased with ``prefix``."""
+    return [
+        F.count(F.lit(1)).alias(f"{prefix}n_rows"),
+        # decimal sum: exact and overflow-safe under ANSI mode (Spark 4 default)
+        F.sum(h.cast("decimal(38,0)")).alias(f"{prefix}content_sum"),
+        F.count_distinct(h).alias(f"{prefix}n_distinct_rows"),
+    ]
+
+
 def fingerprint(df: DataFrame) -> DataFrame:
     """One-row content fingerprint: row count + order-independent XOR-free
     sum of row hashes (sum over int64 wraps identically everywhere) —
     a single scan, map-side partial aggregation."""
-    h = row_hash(df)
-    # decimal sum: exact and overflow-safe under ANSI mode (Spark 4 default)
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(h.cast("decimal(38,0)")).alias("content_sum"),
-        F.count_distinct(h).alias("n_distinct_rows"),
-    )
+    return df.agg(*_fingerprint_aggs(row_hash(df)))
 
 
 @dataclass
@@ -100,25 +105,21 @@ def verify_partitions(
         if keys is not None:
             d = d.where(k.isin([str(x) for x in keys]))
         h = row_hash(d.drop(part_col))
-        return d.groupBy(k.alias("k")).agg(
-            F.count(F.lit(1)).alias(f"{prefix}_rows"),
-            F.sum(h.cast("decimal(38,0)")).alias(f"{prefix}_sum"),
-            F.count_distinct(h).alias(f"{prefix}_distinct"),
-        )
+        return d.groupBy(k.alias("k")).agg(*_fingerprint_aggs(h, prefix))
 
     joined = (
-        fp_by(src, "src").join(fp_by(dst, "dst"), "k", "full_outer").collect()
+        fp_by(src, "src_").join(fp_by(dst, "dst_"), "k", "full_outer").collect()
     )
     out: dict[str, VerifyReport] = {}
     for r in joined:
-        sn = r["src_rows"] if r["src_rows"] is not None else 0
-        dn = r["dst_rows"] if r["dst_rows"] is not None else 0
+        sn = r["src_n_rows"] if r["src_n_rows"] is not None else 0
+        dn = r["dst_n_rows"] if r["dst_n_rows"] is not None else 0
         equal = (
-            r["src_rows"] is not None
-            and r["dst_rows"] is not None
+            r["src_n_rows"] is not None
+            and r["dst_n_rows"] is not None
             and sn == dn
-            and r["src_sum"] == r["dst_sum"]
-            and r["src_distinct"] == r["dst_distinct"]
+            and r["src_content_sum"] == r["dst_content_sum"]
+            and r["src_n_distinct_rows"] == r["dst_n_distinct_rows"]
         )
         out[r["k"]] = VerifyReport(equal, sn, dn, 0 if equal else -1, 0 if equal else -1)
     return out

@@ -346,18 +346,63 @@ def test_quarantine_read_keeps_out_of_window_columns(spark, tmp_path):
 
 def test_clean_source_skips_quarantine_path(spark, src_warehouse, tmp_path):
     """No corrupt files → empty quarantine, no corrupt_file alerts, and
-    results identical to a scan-disabled run (the normal whole-dir read)."""
-    for flag, sub in ((True, "a"), (False, "b")):
-        dst = str(tmp_path / sub)
-        report = migrate(
-            spark,
-            MigrateJob(
-                src_root=src_warehouse, dst_root=dst, table="lineitem",
-                start="1996-01-01", end="1996-06-30", quarantine_scan=flag,
-            ),
-        )
-        assert report.quarantined == []
-        assert not any(a.kind == "corrupt_file" for a in report.alerts)
-        assert report.ok and report.copied == [
-            f"1996{m:02d}" for m in range(1, 7)
-        ]
+    a verified copy of every requested month."""
+    report = migrate(
+        spark,
+        MigrateJob(
+            src_root=src_warehouse, dst_root=str(tmp_path / "dst"), table="lineitem",
+            start="1996-01-01", end="1996-06-30",
+        ),
+    )
+    assert report.quarantined == []
+    assert not any(a.kind == "corrupt_file" for a in report.alerts)
+    assert report.ok and report.copied == [f"1996{m:02d}" for m in range(1, 7)]
+
+
+def test_corrupt_file_outside_range_does_not_break_migrate(spark, smoke_dir, tmp_path):
+    """A truncated file in a partition OUTSIDE the migrated range must
+    not touch the copy: the table-wide schema merge reads only
+    footer-checked files, so the 1996 months copy and verify green, and
+    the corrupt file is no quarantine entry (the copy never reads it)."""
+    src = str(tmp_path / "src_wh")
+    table(spark, smoke_dir, "lineitem").withColumn(
+        "par_dt", F.date_format("l_shipdate", "yyyyMM")
+    ).write.partitionBy("par_dt").parquet(f"{src}/lineitem")
+    _corrupt_one_file(f"{src}/lineitem/par_dt=199702", "truncate")
+
+    report = migrate(
+        spark,
+        MigrateJob(
+            src_root=src, dst_root=str(tmp_path / "dst_wh"), table="lineitem",
+            start="1996-01-01", end="1996-12-31",
+        ),
+    )
+    assert report.copied == [f"1996{m:02d}" for m in range(1, 13)]
+    assert report.ok and set(report.verify) == set(report.copied)
+    assert report.quarantined == []
+    assert not any(a.kind == "corrupt_file" for a in report.alerts)
+
+
+def test_unfinished_write_residue_is_not_copied(spark, tmp_path):
+    """Files under a hidden dir (the staging tree an unfinished Hive
+    insert leaves in a partition) are invisible to a Spark directory
+    read of the source. migrate plans its read from its own listing, so
+    it must skip them too: the partition arrives with its visible rows,
+    once."""
+    import os
+    import shutil
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    spark.createDataFrame([(1, "01"), (2, "01")], "id long, par_dt string").write.partitionBy(
+        "par_dt"
+    ).parquet(f"{src}/t")
+    leaf = f"{src}/t/par_dt=01"
+    residue = os.path.join(leaf, ".hive-staging_hive_1", "-ext-10000")
+    os.makedirs(residue)
+    for f in os.listdir(leaf):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(leaf, f), residue)
+
+    report = migrate(spark, MigrateJob(src_root=src, dst_root=dst, table="t"))
+    assert report.ok and report.copied == ["01"]
+    assert sorted(r.id for r in spark.read.parquet(f"{dst}/t").collect()) == [1, 2]

@@ -528,8 +528,11 @@ def test_schema_drift_report_matches_independent_walk(spark, tmp_path):
 
     a = spark.createDataFrame([(1, 10.0)], "id long, v double")
     b = spark.createDataFrame([(2, 20.0, "x")], "id long, v double, note string")
-    a.repartition(2).write.parquet(str(tmp_path / "t" / "p=1"))
-    b.repartition(2).write.parquet(str(tmp_path / "t" / "p=2"))
+    # two files per directory on any core count: one single-file
+    # append each (repartition(2) of a one-row frame may write only one)
+    for df, part in ((a, "p=1"), (b, "p=2")):
+        for _ in range(2):
+            df.coalesce(1).write.mode("append").parquet(str(tmp_path / "t" / part))
 
     files = []
     for root, _dirs, names in os.walk(tmp_path / "t"):

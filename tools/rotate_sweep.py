@@ -65,26 +65,19 @@ RESHAPED: dict[str, int] = {
     "q41": 13,
     "q63": 13,
     "q122": 13,
-    # round-14 reshape: q251's codebook/LUT build factored into
-    # _pq_encode (shared with the new q253 IVF+PQ composition); its r13
-    # driver row proves the pre-refactor inline loop.
-    "q251": 14,
     # round-14 OPTIMIZATION reshapes (OPTIMIZATION_r14.md): q205 FK
     # checks folded into one fact scan; q123 pagerank loop invariants
     # hoisted + node table derived from the outdeg checkpoint;
     # q68/q85/q70 connected_components convergence check restructured;
-    # q244 triage fused into one mapInPandas; q246 month list taken
-    # from the migrate report; q253/q256 (with q251 above) share the
-    # thread-pooled _pq_encode. Latest driver rows predate these.
+    # q244 triage fused into one mapInPandas. Latest driver rows predate
+    # these. (q246/q251/q253/q256 were also reshaped in r14; their r15
+    # pins below supersede those entries.)
     "q205": 14,
     "q123": 14,
     "q68": 14,
     "q85": 14,
     "q70": 14,
     "q244": 14,
-    "q246": 14,
-    "q253": 14,
-    "q256": 14,
     # r14 pin-rule misses flagged by VERDICT r14 (item 4): q64 consumes
     # the r14-changed connected_components (operators/components.py) but
     # was left outside the r14 window; q202 exercises the r14 staging/
